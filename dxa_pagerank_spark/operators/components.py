@@ -1,29 +1,27 @@
 """Connected components. [north_rule — no reference code]
 
-Two methods, both pure DataFrame programs:
-
-* ``two_phase`` (default): alternating large-star / small-star
-  min-label edge rewriting (Kiveris et al., "Connected Components in
-  MapReduce and Beyond") — O(log^2 n) rounds even on pathological
-  chains; the scale path named by BASELINE.json north_star.
-* ``propagation``: synchronous min-label propagation — O(diameter)
-  rounds, simpler per-round plan; fine for low-diameter web graphs.
+Alternating large-star / small-star min-label edge rewriting (Kiveris
+et al., "Connected Components in MapReduce and Beyond"), a pure
+DataFrame program: O(log^2 n) rounds even on pathological chains; the
+scale path named by BASELINE.json north_star.
 
 Component id = the minimum vertex id in the component (exact-match
 tested against a union-find oracle).
 
 Scale notes: every round is (groupBy min) + (join on the grouping key)
 — partial-aggregated map-side; the working edge set shrinks toward one
-star edge per vertex and is re-materialized per round via
-localCheckpoint to truncate lineage (same discipline as the PageRank
-loop). Self-loops/duplicates are dropped up front — they cannot change
-connectivity.
+star edge per vertex and is re-materialized per round by the shared
+superstep loop (operators/superstep.py), whose one aggregate per round
+is the edge-set signature the fixpoint test compares. Self-loops/
+duplicates are dropped up front — they cannot change connectivity.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .superstep import supersteps
 
 
 def _symmetrize(pairs: DataFrame) -> DataFrame:
@@ -73,7 +71,6 @@ def connected_components(
     edges: DataFrame,
     num_vertices: int | None = None,
     vertices: DataFrame | None = None,
-    method: str = "two_phase",
     max_rounds: int = 50,
     stats: dict | None = None,
 ) -> DataFrame:
@@ -88,17 +85,9 @@ def connected_components(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-
-    if method == "two_phase":
-        parents = _two_phase(pairs, max_rounds, stats=stats)
-    elif method == "propagation":
-        parents = _propagation(pairs, max_rounds)
-    else:
-        raise ValueError(f"unknown method {method!r}")
-
-    return _attach(verts, parents)
+    return _attach(verts, _two_phase(pairs, max_rounds, stats=stats))
 
 
 def incremental_components(
@@ -143,7 +132,7 @@ def incremental_components(
         .filter(F.col("u") != F.col("v"))
         .union(label_pairs)
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
     return _attach(verts, _two_phase(pairs, max_rounds, stats=stats))
 
@@ -161,92 +150,37 @@ def _attach(verts: DataFrame, parents: DataFrame) -> DataFrame:
     )
 
 
-def _edge_signature(edges: DataFrame):
+def _edge_signature():
     """One map-side-combinable aggregate summarizing the edge SET:
     (count, sum of xxhash64(u,v), sum of seeded xxhash64). Both phases
     emit distinct pairs, so set equality reduces to signature equality
-    up to a 2^-128 dual-hash collision — one cheap job over the
-    already-checkpointed blocks, replacing the two full-edge-set
-    exceptAll shuffles per round the r03 audit flagged (each was a
-    shuffle of BOTH generations purely to detect convergence)."""
+    up to a 2^-128 dual-hash collision — folded into the job that
+    materialises the round, replacing the two full-edge-set exceptAll
+    shuffles per round the r03 audit flagged (each was a shuffle of
+    BOTH generations purely to detect convergence)."""
     # decimal(38,0) sums: a long-typed sum of 64-bit hashes overflows
     # under ANSI mode; decimal is exact to 10^38 (~10^19 edges here).
-    return tuple(
-        edges.agg(
-            F.count(F.lit(1)),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-            F.sum(
-                F.xxhash64(F.lit(0x9E3779B9), "u", "v").cast("decimal(38,0)")
-            ),
-        ).collect()[0]
-    )
+    return [
+        F.count(F.lit(1)),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+        F.sum(F.xxhash64(F.lit(0x9E3779B9), "u", "v").cast("decimal(38,0)")),
+    ]
 
 
 def _two_phase(
     pairs: DataFrame, max_rounds: int, stats: dict | None = None
 ) -> DataFrame:
-    edges = pairs
-    sig = _edge_signature(edges)
-    rounds = 0
-    for _ in range(max_rounds):
-        rounds += 1
-        after = _small_star(_large_star(edges)).localCheckpoint(eager=True)
+    # also materialises the (lazily checkpointed) input pairs
+    sig = pairs.agg(*_edge_signature()).collect()[0]
+    edges, rounds = pairs, 0
+    for rounds, edges, row, _ in supersteps(
+        pairs, lambda e: _small_star(_large_star(e)), _edge_signature(), max_rounds
+    ):
         # fixpoint: the star edge set is invariant under both phases
-        after_sig = _edge_signature(after)
-        changed = after_sig != sig
-        sig = after_sig
-        old = edges
-        edges = after
-        if old is not pairs:
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        if not changed:
+        if row == sig:
             break
+        sig = row
     if stats is not None:
         stats["rounds"] = rounds
     # at fixpoint every edge points leaf -> component-min root
     return edges.groupBy("u").agg(F.min("v").alias("v"))
-
-
-def _propagation(pairs: DataFrame, max_rounds: int) -> DataFrame:
-    sym = _symmetrize(pairs).localCheckpoint(eager=True)
-    labels = (
-        sym.select(F.col("u").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    for _ in range(max_rounds):
-        nbr_min = (
-            sym.join(labels, sym.u == labels.id)
-            .groupBy("v")
-            .agg(F.min("comp").alias("nbr_comp"))
-        )
-        new_labels = (
-            labels.alias("l")
-            .join(nbr_min.alias("n"), F.col("l.id") == F.col("n.v"), "left")
-            .select(
-                F.col("l.id").alias("id"),
-                F.least(
-                    F.col("l.comp"),
-                    F.coalesce(F.col("n.nbr_comp"), F.col("l.comp")),
-                ).alias("comp"),
-                (
-                    F.col("l.comp")
-                    > F.coalesce(F.col("n.nbr_comp"), F.col("l.comp"))
-                ).cast("long").alias("changed"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        n_changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
-        old = labels
-        labels = new_labels.select("id", "comp")
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-        if n_changed == 0:
-            break
-    return labels.select(F.col("id").alias("u"), F.col("comp").alias("v"))

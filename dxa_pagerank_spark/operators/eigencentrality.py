@@ -13,10 +13,11 @@ ReadLumpInEdgeListTask.java:69-71, as in operators/hits.py).
 
 Physical plan per round: ONE rank-table shuffle (gather by dst)
 against the src-partitioned persisted edge table; map-side partial agg
-shrinks the product to ~|V| rows; the normalization sum is the
-per-round action/BSP barrier; localCheckpoint truncates lineage —
-the audited operators/pagerank.py loop shape minus the dangling
-machinery.
+shrinks the product to ~|V| rows. The state holds the UNnormalized
+gather; its sum is the round's one action on the shared superstep loop
+(operators/superstep.py, which also truncates lineage), and the next
+round divides by it as a literal — so each gather runs once — the
+audited operators/pagerank.py loop shape minus the dangling machinery.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def eigenvector_centrality(
@@ -52,32 +55,32 @@ def eigenvector_centrality(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = verts.count()
-    state = verts.select(
-        "id", F.lit(1.0 / n).alias("centrality")
-    ).localCheckpoint(eager=True)
+
+    def step(state):
+        g = (
+            e.join(
+                state.select(
+                    F.col("id").alias("src"),
+                    (F.col("raw") / tot).alias("centrality"),
+                ),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("centrality").alias("raw"))
+        )
+        return verts.join(g, "id", "left").select(
+            "id", F.coalesce("raw", F.lit(0.0)).alias("raw")
+        )
+
+    # round 0 holds 1/n itself, so its "total" is 1.0 (x / 1.0 == x)
+    tot = 1.0
+    state = verts.select("id", F.lit(1.0 / n).alias("raw")).localCheckpoint(
+        eager=True
+    )
     try:
-        for _ in range(rounds):
-            g = (
-                e.join(
-                    state.select(F.col("id").alias("src"), "centrality"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("centrality").alias("raw"))
-            )
-            st = verts.join(g, "id", "left").select(
-                "id", F.coalesce("raw", F.lit(0.0)).alias("raw")
-            )
-            tot = st.agg(F.sum("raw")).collect()[0][0] or 1.0
-            old = state
-            state = st.select(
-                "id", (F.col("raw") / tot).alias("centrality")
-            ).localCheckpoint(eager=True)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        return state
+        for _, state, row, _ in supersteps(state, step, [F.sum("raw")], rounds):
+            tot = row[0] or 1.0
+        return state.select("id", (F.col("raw") / tot).alias("centrality"))
     finally:
         e.unpersist()
         verts.unpersist()

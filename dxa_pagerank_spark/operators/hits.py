@@ -16,18 +16,22 @@ hub gather by src) against the edge table persisted in BOTH join
 orientations (src-partitioned for the auth gather, dst-partitioned for
 the hub gather) — the 100-TB side never moves in either half-step;
 map-side partial aggregation keeps each exchange at ~|V| rows. Each
-gather executes exactly once per round: its product is
-localCheckpoint-ed, the L1 total is then a trivial scan of the cached
-~|V| rows, and the normalizing division folds into the next half-step
-as a collected literal (the dangling-lump trick, pagerank.py; same
-restructuring as salsa.py).
+half-step is one round of the shared superstep loop
+(operators/superstep.py): its UNnormalized gather product is the
+checkpointed state, its L1 total the round's one action, and the
+normalizing division folds into the next half-step as a literal (the
+dangling-lump trick, pagerank.py) — so each gather executes exactly
+once and a round costs two jobs. salsa.py runs the same loop with
+degree-weighted gathers.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def hits(
@@ -56,58 +60,64 @@ def hits(
         .repartition(P, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n = verts.count()
-    state_ckpt = verts.select(
-        "id", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-    ).localCheckpoint(eager=True)
-    state = state_ckpt
+    return _reinforce(verts, e, e_bwd, rounds, F.sum("hub"), F.sum("auth"))
 
-    try:
-        for _ in range(rounds):
-            # auth step: pull hub mass along in-edges. Checkpoint the
-            # gather product FIRST, take the L1 total from the cached
-            # ~|V| rows, and fold the division in as a literal —
-            # previously the un-materialized gather re-executed for
-            # the total and again in the hub half-step (same
-            # restructuring as salsa.py).
-            a = (
-                e.join(state.select(F.col("id").alias("src"), "hub"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("hub").alias("a_raw"))
-                .localCheckpoint(eager=True)
-            )
-            tot_a = a.agg(F.sum("a_raw")).collect()[0][0] or 1.0
-            st = verts.join(a, "id", "left").select(
-                "id",
-                (F.coalesce("a_raw", F.lit(0.0)) / tot_a).alias("auth"),
-            )
-            # hub step: pull auth mass along out-edges
-            h = (
-                e_bwd.join(st.select(F.col("id").alias("dst"), "auth"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum("auth").alias("h_raw"))
-            )
-            st2 = (
-                verts.join(h, "id", "left")
-                .join(st, "id")
-                .select(
-                    "id", "auth", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw")
+
+def _reinforce(
+    verts: DataFrame,
+    e_fwd: DataFrame,
+    e_bwd: DataFrame,
+    rounds: int,
+    auth_mass: Column,
+    hub_mass: Column,
+) -> DataFrame:
+    """The L1-normalized mutual-reinforcement loop shared with salsa.py:
+    ``auth_mass`` aggregates an in-edge's ``hub`` (plus e_fwd's
+    columns) per dst, ``hub_mass`` an out-edge's ``auth`` (plus e_bwd's
+    columns) per src. Releases the three persisted inputs."""
+
+    def half_step(state):
+        if "auth" in state.columns:
+            # auth step: pull hub mass along in-edges
+            return (
+                e_fwd.join(
+                    state.select(
+                        F.col("id").alias("src"), (F.col("raw") / tot).alias("hub")
+                    ),
+                    "src",
                 )
-                .localCheckpoint(eager=True)
+                .groupBy(F.col("dst").alias("id"))
+                .agg(auth_mass.alias("raw"))
             )
-            tot_h = st2.agg(F.sum("h_raw")).collect()[0][0] or 1.0
-            old = state_ckpt
-            state_ckpt = st2
-            state = st2.select(
-                "id", (F.col("h_raw") / tot_h).alias("hub"), "auth"
-            )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-            a.unpersist()
-        return state.select("id", "auth", "hub")
+        # hub step: pull auth mass along out-edges
+        st = verts.join(state, "id", "left").select(
+            "id", (F.coalesce("raw", F.lit(0.0)) / tot).alias("auth")
+        )
+        h = (
+            e_bwd.join(st.select(F.col("id").alias("dst"), "auth"), "dst")
+            .groupBy(F.col("src").alias("id"))
+            .agg(hub_mass.alias("h_raw"))
+        )
+        return (
+            verts.join(h, "id", "left")
+            .join(st, "id")
+            .select("id", "auth", F.coalesce("h_raw", F.lit(0.0)).alias("raw"))
+        )
+
+    # state: (id, auth, raw hub) after a hub step, (id, raw auth) after
+    # an auth step; round 0 holds the hub 1/n itself, so its total is 1.0
+    tot = 1.0
+    try:
+        n = verts.count()
+        state = verts.select(
+            "id", F.lit(1.0 / n).alias("auth"), F.lit(1.0 / n).alias("raw")
+        ).localCheckpoint(eager=True)
+        for _, state, row, _ in supersteps(
+            state, half_step, [F.sum("raw")], 2 * rounds
+        ):
+            tot = row[0] or 1.0
+        return state.select("id", "auth", (F.col("raw") / tot).alias("hub"))
     finally:
-        e.unpersist()
+        e_fwd.unpersist()
         e_bwd.unpersist()
         verts.unpersist()

@@ -15,8 +15,9 @@ Physical plan mirrors the audited PageRank df loop
 hash-partitioned by src once and persisted, the per-round shuffle is
 only the |V|-row score table, no per-vertex normalisation joins
 (Katz needs no out-degree weighting at all, so the loop is one join +
-one partial/final hash aggregate per round), and localCheckpoint
-truncates lineage so round t's plan does not embed rounds 1..t-1.
+one partial/final hash aggregate per round), and the shared superstep
+loop (operators/superstep.py) truncates lineage so round t's plan does
+not embed rounds 1..t-1.
 alpha must be < 1/lambda_max for the infinite sum to converge; the
 fixed-round form is well-defined for any alpha.
 """
@@ -26,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def katz_centrality(
@@ -58,33 +61,28 @@ def katz_centrality(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
+    def step(scores):
+        gathered = (
+            adj.join(scores.withColumnRenamed("id", "src"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum("score").alias("gathered"))
+        )
+        return verts.join(gathered, "id", "left").select(
+            "id",
+            (
+                F.lit(float(beta))
+                + F.lit(float(alpha)) * F.coalesce("gathered", F.lit(0.0))
+            ).alias("score"),
+        )
+
     scores = verts.select("id", F.lit(float(beta)).alias("score")).localCheckpoint(
         eager=True
     )
     try:
-        for _ in range(rounds):
-            gathered = (
-                adj.join(scores.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("score").alias("gathered"))
-            )
-            old = scores
-            scores = (
-                verts.join(gathered, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(float(beta))
-                        + F.lit(float(alpha))
-                        * F.coalesce("gathered", F.lit(0.0))
-                    ).alias("score"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+        for _, scores, _, _ in supersteps(
+            scores, step, [F.count(F.lit(1))], rounds
+        ):
+            pass
         if normalize:
             norm = scores.agg(
                 F.sqrt(F.sum(F.col("score") * F.col("score")))

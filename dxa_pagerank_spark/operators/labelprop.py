@@ -15,12 +15,15 @@ Physical shape per round: edges ⋈ labels (shuffle the small label
 table) -> groupBy (dst, label) count (map-side partial agg) -> per-dst
 argmax via a single max(struct(cnt, -label)) aggregate — no window
 function, so no extra sort; two shuffles total, both keyed by vertex.
+Rounds run on the shared superstep loop (operators/superstep.py).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .superstep import supersteps
 
 
 def label_propagation(
@@ -46,7 +49,7 @@ def label_propagation(
         eager=True
     )
 
-    for _ in range(max_rounds):
+    def step(labels):
         counts = (
             sym.join(labels, sym.u == labels.id)
             .groupBy(F.col("v").alias("vid"), "label")
@@ -58,7 +61,7 @@ def label_propagation(
             .alias("top")
         ).select("vid", (-F.col("top.neg")).alias("new_label"))
 
-        new_labels = (
+        return (
             labels.alias("l")
             .join(best.alias("b"), F.col("l.id") == F.col("b.vid"), "left")
             .select(
@@ -69,18 +72,14 @@ def label_propagation(
                     != F.col("l.label")
                 ).cast("long").alias("changed"),
             )
-            .localCheckpoint(eager=True)
         )
-        n_changed = new_labels.agg(F.sum("changed")).collect()[0][0] or 0
-        old = labels
-        labels = new_labels.select("id", "label")
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-        if n_changed == 0:
+
+    for _, labels, row, _ in supersteps(
+        labels, step, [F.sum("changed")], max_rounds
+    ):
+        if not row[0]:
             break
-    return labels
+    return labels.select("id", "label")
 
 
 def seeded_label_propagation(
@@ -122,7 +121,8 @@ def seeded_label_propagation(
     labels = base.select(
         "id", F.col("seed_label").alias("label")
     ).localCheckpoint(eager=True)
-    for _ in range(rounds):
+
+    def step(labels):
         counts = (
             sym.join(
                 labels.filter(F.col("label").isNotNull()),
@@ -140,8 +140,7 @@ def seeded_label_propagation(
             )
             .select("vid", (-F.col("top.neg")).alias("new_label"))
         )
-        old = labels
-        labels = (
+        return (
             base.join(labels.select(F.col("id"), "label"), "id")
             .join(best, base["id"] == best["vid"], "left")
             .select(
@@ -150,10 +149,8 @@ def seeded_label_propagation(
                     "seed_label", "new_label", "label"
                 ).alias("label"),
             )
-            .localCheckpoint(eager=True)
         )
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+
+    for _, labels, _, _ in supersteps(labels, step, [F.count(F.lit(1))], rounds):
+        pass
     return labels

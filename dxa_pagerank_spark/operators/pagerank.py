@@ -25,19 +25,22 @@ Physical design (SURVEY.md §4.3) — what each superstep costs at scale:
   * One action per round (the sum/L1 aggregate) doubles as the BSP
     barrier, exactly like the reference master's poll loop
     (MainPR.java:148-161).
-  * Lineage is truncated every round via localCheckpoint (else the
-    logical plan grows O(rounds) and Catalyst analysis dominates);
-    a durable CheckpointManager (plans/checkpoint.py) adds resume.
+  * The round loop is operators/superstep.py: lineage is truncated
+    every round by a lazy localCheckpoint that the stats aggregate
+    materialises (else the logical plan grows O(rounds) and Catalyst
+    analysis dominates); a durable CheckpointManager
+    (plans/checkpoint.py) adds resume.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 @dataclass
@@ -101,7 +104,6 @@ def pagerank(
     resume: bool = False,
     hub_salt: int = 0,
     hub_threshold: int = 100_000,
-    ckpt_storage: StorageLevel | None = StorageLevel.DISK_ONLY,
     initial_ranks: DataFrame | None = None,
     adjacency: DataFrame | None = None,
 ) -> PageRankResult:
@@ -138,14 +140,6 @@ def pagerank(
     salting is for clusters/configs where AQE is unavailable or the
     skew exceeds what post-hoc splitting handles. Results are identical
     with or without (tested).
-
-    ckpt_storage: storage level for the per-round rank localCheckpoint.
-    Default DISK_ONLY: the snapshot is a sequential ~8B-per-vertex write
-    the OS absorbs, and keeping it OFF the JVM heap measurably tames the
-    GC churn that per-round heap-resident snapshots cause under many
-    task threads (BENCH.md df matrix: medians improved at both 8 and 32
-    cores, 32-core floor 9.3 s -> 5.7 s). Pass None for Spark's default
-    (MEMORY_AND_DISK) — results are identical either way.
     """
     num_partitions = num_partitions or spark.sparkContext.defaultParallelism
 
@@ -165,10 +159,19 @@ def pagerank(
         # would re-Exchange the |E|-row side in every gather — the
         # exact shuffle this mode exists to remove. The (tiny) rank
         # table carries the stored width instead.
-        idx_t = dict(adjacency.dtypes).get("src", "long")
+        types = dict(adjacency.dtypes)
+        idx_t = types.get("src", "long")
         if idx_t not in ("int", "bigint", "long"):
             raise ValueError(
                 f"pagerank: adjacency src must be int or bigint, got {idx_t}"
+            )
+        # a wider dst would be narrowed to the src width below: it
+        # overflows in an executor under ANSI mode, or silently wraps
+        # ids onto the wrong vertices without it
+        if types.get("dst") != idx_t:
+            raise ValueError(
+                f"pagerank: adjacency dst type {types.get('dst')} differs "
+                f"from src type {idx_t} — store both at one width"
             )
         idx_t = "int" if idx_t == "int" else "long"
         # Prebuilt (bucketed) adjacency: trust its storage partitioning
@@ -186,12 +189,10 @@ def pagerank(
         verts = vertex_universe(
             spark, adj.select("src", "dst"), num_vertices, vertices
         )
-        if num_vertices is not None and vertices is None:
-            n = num_vertices
-        else:
-            # only the size is needed — the id width is already fixed
-            # by the stored table, so no max/min aggregate
-            n = int(verts.count())
+        # only the size is needed — the id width is already fixed by the
+        # stored table, so no max/min aggregate. num_vertices wins over
+        # the universe's row count, as in the edge-frame branch.
+        n = num_vertices if num_vertices is not None else int(verts.count())
         if idx_t == "int" and n > 2**31:
             raise ValueError(
                 f"pagerank: adjacency stores int ids but the universe "
@@ -368,61 +369,51 @@ def pagerank(
             .localCheckpoint(eager=True)
         )
 
+    def step(state):
+        ranks = state.select("id", "rank")
+        contribs = gather(adj, ranks)
+        return ranks.alias("r").join(
+            contribs.alias("c"), F.col("r.id") == F.col("c.dst"), "left"
+        ).select(
+            F.col("r.id").alias("id"),
+            F.col("r.rank").alias("old_rank"),
+            (
+                F.lit((1.0 - damping) * inv_n)
+                + F.lit(damping) * F.coalesce(F.col("c.contrib"), F.lit(0.0))
+                + F.lit(damping * dangling * inv_n)
+            ).alias("rank"),
+        )
+
+    stats = [
+        F.sum("rank").alias("pr_sum"),
+        F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("err"),
+    ]
+    state = ranks
     if not result.converged:
-        for i in range(start_round, max_rounds):
-            t0 = time.monotonic()
-            contribs = gather(adj, ranks)
-            updated = (
-                ranks.alias("r")
-                .join(contribs.alias("c"), F.col("r.id") == F.col("c.dst"), "left")
-                .select(
-                    F.col("r.id").alias("id"),
-                    F.col("r.rank").alias("old_rank"),
-                    (
-                        F.lit((1.0 - damping) * inv_n)
-                        + F.lit(damping) * F.coalesce(F.col("c.contrib"), F.lit(0.0))
-                        + F.lit(damping * dangling * inv_n)
-                    ).alias("rank"),
-                )
-                # truncate lineage; eager=False so the stats aggregate
-                # below is the single job that both materializes the
-                # checkpoint and reduces the round's scalars — one pass
-                # over the new ranks instead of two.
-                .localCheckpoint(eager=False, storageLevel=ckpt_storage)
-            )
-            row = updated.agg(
-                F.sum("rank").alias("pr_sum"),
-                F.sum(F.abs(F.col("rank") - F.col("old_rank"))).alias("err"),
-            ).collect()[0]
+        for rnd, state, row, ms in supersteps(
+            ranks, step, stats, max_rounds, start_round
+        ):
             # empty non-dangling set -> NULL sums; reference semantics:
             # no updates, PRerr=0, PRsum=0 (empty DoubleAdder) -> converge.
             err = float(row["err"]) if row["err"] is not None else 0.0
             pr_sum = float(row["pr_sum"]) if row["pr_sum"] is not None else 0.0
             dangling = 1.0 - pr_sum  # mass by conservation (MainPR.java:156-161)
 
-            old = ranks
-            ranks = updated.select("id", "rank")
-            if old is not updated:
-                try:
-                    old.unpersist()
-                except Exception:
-                    pass
-
-            result.rounds = i + 1
+            result.rounds = rnd
             result.errors.append(err)
             result.dangling_mass.append(dangling)
-            result.round_ms.append(int((time.monotonic() - t0) * 1000))
+            result.round_ms.append(ms)
 
             if checkpoint_manager is not None and (
-                (i + 1) % checkpoint_interval == 0 or err <= threshold
+                rnd % checkpoint_interval == 0 or err <= threshold
             ):
                 checkpoint_manager.save(
-                    ranks,
-                    iteration=i + 1,
+                    state.select("id", "rank"),
+                    iteration=rnd,
                     l1_err=err,
                     pr_sum=pr_sum,
                     dangling_mass=dangling,
-                    wall_ms=result.round_ms[-1] if result.round_ms else 0,
+                    wall_ms=ms,
                     n_partitions=num_partitions,
                     errors=result.errors,
                     dangling_masses=result.dangling_mass,
@@ -431,6 +422,7 @@ def pagerank(
             if err <= threshold:
                 result.converged = True
                 break
+    ranks = state.select("id", "rank")
 
     # Final restore pass (MainPR.java:185-197): dangling vertices computed
     # once from converged neighbor ranks + the last dangling mass.
@@ -463,10 +455,7 @@ def pagerank(
         caches.append(nd_ids)
     for cached in caches:
         if cached is not None:
-            try:
-                cached.unpersist()
-            except Exception:
-                pass
+            cached.unpersist()
     return result
 
 

@@ -13,8 +13,9 @@ SQL-checkable); duplicate edges count.
 Physical plan mirrors operators.pagerank: adjacency weighted 1/out_deg
 partitioned+persisted once, per-round shuffle is the |V|-row rank
 table, the dangling mass is a driver-literal folded into the
-projection (one extra 1-row aggregate per round over the dangling
-subset), localCheckpoint truncates lineage.
+projection; the shared superstep loop (operators/superstep.py)
+truncates lineage and reduces the next round's dangling mass in the job
+that materialises the round.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def personalized_pagerank(
@@ -81,43 +84,31 @@ def personalized_pagerank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
-    ranks = verts.select("id", F.col("s").alias("rank")).localCheckpoint(
-        eager=True
-    )
+    def step(ranks):
+        contrib = (
+            adj.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+        )
+        return verts.join(contrib, "id", "left").select(
+            "id",
+            "dangling",
+            (
+                F.lit(1.0 - d) * F.col("s")
+                + F.lit(d)
+                * (F.coalesce("contrib", F.lit(0.0)) + F.lit(m) * F.col("s"))
+            ).alias("rank"),
+        )
+
+    mass = F.sum(F.when(F.col("dangling"), F.col("rank")))
+    ranks = verts.select(
+        "id", "dangling", F.col("s").alias("rank")
+    ).localCheckpoint(eager=False)
     try:
-        for _ in range(rounds):
-            m = (
-                ranks.join(verts.filter("dangling").select("id"), "id", "left_semi")
-                .agg(F.sum("rank"))
-                .collect()[0][0]
-                or 0.0
-            )
-            contrib = (
-                adj.join(ranks.withColumnRenamed("id", "src"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-            )
-            old = ranks
-            ranks = (
-                verts.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(1.0 - d) * F.col("s")
-                        + F.lit(d)
-                        * (
-                            F.coalesce("contrib", F.lit(0.0))
-                            + F.lit(m) * F.col("s")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        return ranks
+        m = ranks.agg(mass).collect()[0][0] or 0.0
+        for _, ranks, row, _ in supersteps(ranks, step, [mass], rounds):
+            m = row[0] or 0.0
+        return ranks.select("id", "rank")
     finally:
         adj.unpersist()
         verts.unpersist()

@@ -25,16 +25,13 @@ setup (one groupBy per side) and the weighted edges are persisted in
 BOTH join orientations (hash-partitioned by src for the auth gather,
 by dst for the hub gather), so neither half-step re-exchanges the
 100-TB side; map-side partial aggregation shrinks each gather product
-to ~|V| rows before its exchange. Each gather executes exactly ONCE
-per round: its product is localCheckpoint-ed, the L1 total is then a
-trivial scan of the cached ~|V| rows, and the normalizing division is
-folded into the next half-step's expression as a collected literal
-(the dangling-lump trick, pagerank.py) — previously the
-un-materialized gather re-executed for the total and again downstream,
-3 heavy jobs per round for 2 gathers. (hits.py keeps a single
-src-partitioned copy and pays an edge re-exchange in its dst-side
-gather; SALSA's weighted table is where the two-orientation trick pays
-for its memory.)
+to ~|V| rows before its exchange. The loop is hits.py's ``_reinforce``
+with degree-weighted gathers: each half-step is one round of the
+shared superstep loop (operators/superstep.py), its UNnormalized
+gather product the checkpointed state, its L1 total the round's one
+action, and the normalizing division folded into the next half-step's
+expression as a literal (the dangling-lump trick, pagerank.py) — so
+each gather executes exactly ONCE, two jobs per round.
 """
 
 from __future__ import annotations
@@ -42,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .hits import _reinforce
 
 
 def salsa(
@@ -84,56 +83,11 @@ def salsa(
         .repartition(P, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n = verts.count()
-    state_ckpt = verts.select(
-        "id", F.lit(1.0 / n).alias("hub"), F.lit(1.0 / n).alias("auth")
-    ).localCheckpoint(eager=True)
-    state = state_ckpt
-
-    try:
-        for _ in range(rounds):
-            # auth step: pull degree-split hub mass along in-edges.
-            # Checkpoint the gather product FIRST, then take the L1
-            # total as a trivial scan of the cached ~|V| rows and fold
-            # the division in as a literal (the dangling-lump trick,
-            # pagerank.py): previously the un-materialized gather
-            # re-executed once for the total and again in the hub
-            # half-step — 3 heavy executions per round for 2 gathers.
-            a = (
-                e_fwd.join(state.select(F.col("id").alias("src"), "hub"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("hub") * F.col("w_fwd")).alias("a_raw"))
-                .localCheckpoint(eager=True)
-            )
-            tot_a = a.agg(F.sum("a_raw")).collect()[0][0] or 1.0
-            st = verts.join(a, "id", "left").select(
-                "id",
-                (F.coalesce("a_raw", F.lit(0.0)) / tot_a).alias("auth"),
-            )
-            # hub step: pull degree-split auth mass along out-edges
-            h = (
-                e_bwd.join(st.select(F.col("id").alias("dst"), "auth"), "dst")
-                .groupBy(F.col("src").alias("id"))
-                .agg(F.sum(F.col("auth") * F.col("w_bwd")).alias("h_raw"))
-            )
-            st2 = (
-                verts.join(h, "id", "left")
-                .join(st, "id")
-                .select(
-                    "id", "auth", F.coalesce("h_raw", F.lit(0.0)).alias("h_raw")
-                )
-                .localCheckpoint(eager=True)
-            )
-            tot_h = st2.agg(F.sum("h_raw")).collect()[0][0] or 1.0
-            old = state_ckpt
-            state_ckpt = st2
-            state = st2.select(
-                "id", "auth", (F.col("h_raw") / tot_h).alias("hub")
-            )
-            old.unpersist()
-            a.unpersist()
-        return state.select("id", "auth", "hub")
-    finally:
-        e_fwd.unpersist()
-        e_bwd.unpersist()
-        verts.unpersist()
+    return _reinforce(
+        verts,
+        e_fwd,
+        e_bwd,
+        rounds,
+        F.sum(F.col("hub") * F.col("w_fwd")),
+        F.sum(F.col("auth") * F.col("w_bwd")),
+    )

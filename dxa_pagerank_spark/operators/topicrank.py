@@ -17,7 +17,8 @@ Physical shape per round: adjacency (weighted 1/out_deg, partitioned by
 src, persisted ONCE) joins the (topic, id) rank table — the shuffle is
 T×V rank rows, not T edge scans; dangling masses are one tiny
 (T-row) aggregate broadcast back; the update is a pure projection.
-Lineage truncated per round. T is bounded (topic taxonomies are tens
+Lineage truncated per round by the shared superstep loop
+(operators/superstep.py). T is bounded (topic taxonomies are tens
 to hundreds), so T×V state scales linearly — at 1e12 vertices run
 topic blocks of whatever T fits executor memory.
 """
@@ -29,6 +30,8 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def topic_sensitive_pagerank(
@@ -88,47 +91,46 @@ def topic_sensitive_pagerank(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
+    def step(ranks):
+        m_df = (
+            ranks.join(
+                verts.filter("dangling").select("topic", "id"),
+                ["topic", "id"],
+                "left_semi",
+            )
+            .groupBy("topic")
+            .agg(F.sum("rank").alias("m"))
+        )
+        contrib = (
+            adj.join(ranks.withColumnRenamed("id", "src"), "src")
+            .groupBy("topic", F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
+        )
+        return (
+            verts.join(contrib, ["topic", "id"], "left")
+            .join(F.broadcast(m_df), "topic", "left")
+            .select(
+                "topic",
+                "id",
+                (
+                    F.lit(1.0 - d) * F.col("s")
+                    + F.lit(d)
+                    * (
+                        F.coalesce("contrib", F.lit(0.0))
+                        + F.coalesce("m", F.lit(0.0)) * F.col("s")
+                    )
+                ).alias("rank"),
+            )
+        )
+
     ranks = verts.select("topic", "id", F.col("s").alias("rank")).localCheckpoint(
         eager=True
     )
     try:
-        for _ in range(rounds):
-            m_df = (
-                ranks.join(
-                    verts.filter("dangling").select("topic", "id"),
-                    ["topic", "id"],
-                    "left_semi",
-                )
-                .groupBy("topic")
-                .agg(F.sum("rank").alias("m"))
-            )
-            contrib = (
-                adj.join(ranks.withColumnRenamed("id", "src"), "src")
-                .groupBy("topic", F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-            )
-            old = ranks
-            ranks = (
-                verts.join(contrib, ["topic", "id"], "left")
-                .join(F.broadcast(m_df), "topic", "left")
-                .select(
-                    "topic",
-                    "id",
-                    (
-                        F.lit(1.0 - d) * F.col("s")
-                        + F.lit(d)
-                        * (
-                            F.coalesce("contrib", F.lit(0.0))
-                            + F.coalesce("m", F.lit(0.0)) * F.col("s")
-                        )
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+        for _, ranks, _, _ in supersteps(
+            ranks, step, [F.count(F.lit(1))], rounds
+        ):
+            pass
         return ranks
     finally:
         adj.unpersist()

@@ -19,8 +19,9 @@ Physical plan (same shape as operators/pagerank.py, the audited 100-TB
 loop): normalized adjacency (src, dst, w_norm) is hash-partitioned by
 src ONCE and persisted — the big side never moves again; each round
 shuffles only the ~16 B/vertex rank table into the gather join, partial
-aggregation runs map-side, the dangling scalar is one 1-row action (the
-BSP barrier), and localCheckpoint truncates lineage per round.
+aggregation runs map-side, and the next round's dangling scalar is the
+round's one aggregate (the BSP barrier) on the shared superstep loop
+(operators/superstep.py), which truncates lineage per round.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
+
+from .superstep import supersteps
 
 
 def weighted_pagerank(
@@ -49,16 +52,23 @@ def weighted_pagerank(
     from .pagerank import vertex_universe
 
     P = num_partitions or spark.sparkContext.defaultParallelism
+    pos = edges.groupBy(F.col("src").alias("t_src")).agg(
+        F.sum("weight").alias("w_tot")
+    ).filter(F.col("w_tot") > 0)
+    # dangling = universe minus positive-out-weight sources
     verts = (
         vertex_universe(spark, edges, num_vertices, vertices)
+        .join(
+            pos.select(F.col("t_src").alias("id"), F.lit(False).alias("d")),
+            "id",
+            "left",
+        )
+        .select("id", F.coalesce("d", F.lit(True)).alias("dangling"))
         .repartition(P, "id")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = verts.count()
 
-    pos = edges.groupBy(F.col("src").alias("t_src")).agg(
-        F.sum("weight").alias("w_tot")
-    ).filter(F.col("w_tot") > 0)
     adj = (
         edges.join(pos, edges.src == F.col("t_src"))
         .select("src", "dst", (F.col("weight") / F.col("w_tot")).alias("w_norm"))
@@ -67,47 +77,30 @@ def weighted_pagerank(
     )
     adj.count()  # materialize the partitioned cache before the loop
 
-    # dangling = universe minus positive-out-weight sources
-    dang = (
-        verts.join(
-            pos.select(F.col("t_src").alias("id")), "id", "left_anti"
+    def step(ranks):
+        contrib = (
+            adj.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
+            .groupBy(F.col("dst").alias("id"))
+            .agg(F.sum(F.col("rank") * F.col("w_norm")).alias("c"))
         )
-        .repartition(P, "id")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+        base = (1.0 - damping) / n + damping * d_mass / n
+        return verts.join(contrib, "id", "left").select(
+            "id",
+            "dangling",
+            (F.lit(base) + F.lit(damping) * F.coalesce("c", F.lit(0.0))).alias(
+                "rank"
+            ),
+        )
 
-    ranks = verts.select("id", F.lit(1.0 / n).alias("rank")).localCheckpoint(
-        eager=True
-    )
+    mass = F.sum(F.when(F.col("dangling"), F.col("rank")))
+    ranks = verts.select(
+        "id", "dangling", F.lit(1.0 / n).alias("rank")
+    ).localCheckpoint(eager=False)
     try:
-        for _ in range(rounds):
-            d_mass = (
-                dang.join(ranks, "id").agg(F.sum("rank")).collect()[0][0] or 0.0
-            )
-            contrib = (
-                adj.join(ranks.select(F.col("id").alias("src"), "rank"), "src")
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("rank") * F.col("w_norm")).alias("c"))
-            )
-            base = (1.0 - damping) / n + damping * d_mass / n
-            old = ranks
-            ranks = (
-                verts.join(contrib, "id", "left")
-                .select(
-                    "id",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        return ranks
+        d_mass = ranks.agg(mass).collect()[0][0] or 0.0
+        for _, ranks, row, _ in supersteps(ranks, step, [mass], rounds):
+            d_mass = row[0] or 0.0
+        return ranks.select("id", "rank")
     finally:
         adj.unpersist()
         verts.unpersist()
-        dang.unpersist()

@@ -27,12 +27,12 @@ def _collect_map(df, key, val, n):
     return np.array([got[i] for i in range(n)], dtype=np.int64)
 
 
-@pytest.mark.parametrize("method", ["two_phase", "propagation"])
+@pytest.mark.parametrize("method", ["two_phase"])
 def test_components_fixture(spark, method):
     n, src, dst = parse_in_edge_list(FIXTURE_GRAPHS["g_components"])
     expected = connected_components_oracle(n, src, dst)
     got = connected_components(
-        spark, edges_to_spark(spark, src, dst), num_vertices=n, method=method
+        spark, edges_to_spark(spark, src, dst), num_vertices=n
     )
     np.testing.assert_array_equal(
         _collect_map(got, "id", "component", n), expected
@@ -41,7 +41,7 @@ def test_components_fixture(spark, method):
     assert len(set(expected.tolist())) == 3
 
 
-@pytest.mark.parametrize("method", ["two_phase", "propagation"])
+@pytest.mark.parametrize("method", ["two_phase"])
 def test_components_random_graphs(spark, method):
     for seed in (1, 5):
         n = 300
@@ -51,7 +51,7 @@ def test_components_random_graphs(spark, method):
         src, dst = src[keep], dst[keep]
         expected = connected_components_oracle(n, src, dst)
         got = connected_components(
-            spark, edges_to_spark(spark, src, dst), num_vertices=n, method=method
+            spark, edges_to_spark(spark, src, dst), num_vertices=n
         )
         np.testing.assert_array_equal(
             _collect_map(got, "id", "component", n), expected
@@ -74,7 +74,7 @@ def test_components_long_chain_two_phase(spark):
     src = np.arange(n - 1, dtype=np.int64)
     dst = src + 1
     got = connected_components(
-        spark, edges_to_spark(spark, src, dst), num_vertices=n, method="two_phase"
+        spark, edges_to_spark(spark, src, dst), num_vertices=n
     )
     np.testing.assert_array_equal(
         _collect_map(got, "id", "component", n), np.zeros(n, dtype=np.int64)

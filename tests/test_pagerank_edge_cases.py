@@ -1,6 +1,7 @@
 """Degenerate-input PageRank cases (found via surface probing)."""
 
 import numpy as np
+import pytest
 
 from dxa_pagerank_spark.operators.pagerank import pagerank
 from dxa_pagerank_spark.oracle import pagerank_oracle
@@ -44,3 +45,33 @@ def test_zero_max_rounds_restore_only(spark):
     np.testing.assert_allclose(
         [got[i] for i in range(3)], oracle.ranks, atol=1e-12
     )
+
+
+def test_adjacency_mode_takes_n_from_num_vertices(spark):
+    """num_vertices wins over a vertices frame in both input modes, so
+    one graph gets one 1/N and one set of ranks either way."""
+    edges = spark.createDataFrame([(0, 1), (0, 2), (1, 2)], "src long, dst long")
+    adj = spark.createDataFrame(
+        [(0, 1, 0.5), (0, 2, 0.5), (1, 2, 1.0)], "src long, dst long, w double"
+    )
+    verts = spark.createDataFrame([(0,), (1,), (2,)], "id long")
+    kw = dict(num_vertices=5, vertices=verts, threshold=1e-12, max_rounds=2)
+    by_edges = pagerank(spark, edges, **kw)
+    by_adj = pagerank(spark, None, adjacency=adj, **kw)
+    assert by_edges.num_vertices == by_adj.num_vertices == 5
+    a = {r["id"]: r["rank"] for r in by_edges.ranks.collect()}
+    b = {r["id"]: r["rank"] for r in by_adj.ranks.collect()}
+    assert set(a) == set(b) == {0, 1, 2}
+    np.testing.assert_allclose(
+        [b[i] for i in range(3)], [a[i] for i in range(3)], atol=1e-12
+    )
+
+
+def test_adjacency_rejects_mismatched_id_types(spark):
+    """A bigint dst under an int src would be narrowed in the loop; it
+    is refused up front instead of overflowing (or wrapping) in a job."""
+    adj = spark.createDataFrame(
+        [(0, 2**32 + 1, 1.0)], "src int, dst bigint, w double"
+    )
+    with pytest.raises(ValueError, match="dst type bigint differs from src type int"):
+        pagerank(spark, None, num_vertices=2, adjacency=adj)
