@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.superstep import release
+
 MARK = "\x1f"
 
 
@@ -118,12 +120,9 @@ def train_bpe(
                 ).alias("s"),
                 "cnt",
             ).localCheckpoint(eager=True)
-            old.unpersist()
+            release(old)
     finally:
-        try:
-            words.unpersist()
-        except Exception:
-            pass
+        release(words)
     return merges
 
 

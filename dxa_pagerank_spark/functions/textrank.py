@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.superstep import release
+
 
 def cooccurrence_edges(
     documents: DataFrame,
@@ -115,12 +117,8 @@ def textrank_keywords(
             )
             .localCheckpoint(eager=True)
         )
-        old = scores
+        release(scores)
         scores = new_scores
-        try:
-            old.unpersist()
-        except Exception:
-            pass
     return (
         scores.select("term", F.round("score", 6).alias("score"))
         .orderBy(F.desc("score"), F.asc("term"))

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .superstep import release
+
 
 def local_block_pagerank(
     spark: SparkSession,
@@ -128,10 +130,7 @@ def local_block_pagerank(
                 )
                 .localCheckpoint(eager=True)
             )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            release(old)
         return state.select("id", "host", F.col("l").alias("lrank"))
     finally:
         ew.unpersist()

@@ -32,6 +32,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .superstep import release
+
 
 def hitting_times(
     spark: SparkSession,
@@ -102,10 +104,7 @@ def hitting_times(
                 )
                 .localCheckpoint(eager=True)
             )
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            release(old)
         return state.select("id", F.col("h").alias("hit_time"))
     finally:
         adj.unpersist()

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .superstep import release
+
 
 def k_core(
     spark: SparkSession,
@@ -62,12 +64,8 @@ def k_core(
                 eager=True
             )
             n_next = nxt.count()
-            old = alive
+            release(alive)
             alive = nxt
-            try:
-                old.unpersist()
-            except Exception:
-                pass
             if n_next == n_alive:
                 n_alive = n_next
                 break

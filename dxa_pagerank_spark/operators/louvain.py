@@ -58,6 +58,8 @@ from pyspark.sql import functions as F
 
 from dxa_pagerank_spark.plans.lineage import cut_lineage
 
+from .superstep import release
+
 
 def _adjacency(edges: DataFrame) -> DataFrame:
     """Directed (src,dst) -> level-0 normal form (u, v, w=1)."""
@@ -243,6 +245,7 @@ def louvain(
         if m2 == 0:
             break
         labels = cut_lineage(deg.select("id", F.col("id").alias("c")))
+        held = labels  # the cut frame behind labels
         level_moved = 0
         idle = 0  # consecutive zero-move rounds; 2 = full parity cycle
         for r in range(max_move_rounds):
@@ -250,12 +253,9 @@ def louvain(
                 louvain_move_round(adj, labels, deg, m2, parity=r % 2)
             )
             moved = stepped.agg(F.sum("changed")).collect()[0][0] or 0
-            old = labels
+            release(held)
+            held = stepped
             labels = stepped.select("id", "c")
-            try:
-                old.unpersist()
-            except Exception:
-                pass
             total_rounds += 1
             level_moved += moved
             idle = idle + 1 if moved == 0 else 0
@@ -281,11 +281,8 @@ def louvain(
             )
         global_labels = cut_lineage(global_labels)
         new_adj = cut_lineage(_contract(adj, labels))
-        try:
-            adj.unpersist()
-            deg.unpersist()
-        except Exception:
-            pass
+        release(adj)
+        release(deg)
         adj = new_adj
 
     if global_labels is None:  # empty graph

@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 from pyspark.storagelevel import StorageLevel
 
+from .superstep import release
+
 
 def neighborhood_profile(
     spark: SparkSession,
@@ -91,6 +93,7 @@ def neighborhood_profile(
         )
 
     balls = balls.localCheckpoint(eager=True)
+    held = [balls]
     profiles = [balls.select("id", F.lit(0).alias("t"), size_col)]
     try:
         for t in range(1, rounds + 1):
@@ -108,18 +111,18 @@ def neighborhood_profile(
                 nxt = merged.groupBy("id").agg(
                     F.hll_union_agg("ball").alias("ball")
                 )
-            old = balls
             balls = nxt.localCheckpoint(eager=True)
+            held.append(balls)
             profiles.append(balls.select("id", F.lit(t).alias("t"), size_col))
-            try:
-                old.unpersist()
-            except Exception:
-                pass
         out = profiles[0]
         for p in profiles[1:]:
             out = out.unionByName(p)
         # materialize before releasing the inputs the lineage still holds
-        return out.localCheckpoint(eager=True)
+        # (every round's balls: each profile reads its own round's)
+        out = out.localCheckpoint(eager=True)
+        for b in held:
+            release(b)
+        return out
     finally:
         adj.unpersist()
         verts.unpersist()

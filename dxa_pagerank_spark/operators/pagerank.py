@@ -14,11 +14,22 @@ Vertex.java:65-67). Semantics are trajectory-exact (SURVEY.md §2.3):
 
 Physical design (SURVEY.md §4.3) — what each superstep costs at scale:
 
+  * The caller's edge frame is cut to a lineage-free leaf once per
+    call (a lazy localCheckpoint of the cast ``(src, dst)`` columns,
+    materialised by the first build job, released at the end). Every
+    frame below plans over that leaf, so a round's plan never carries
+    the caller's plan, however large (a 10^5-row ``LocalRelation`` from
+    ``createDataFrame`` made planning most of a round).
   * ``adj(src, dst, w=1/out_deg)`` is built once, hash-partitioned by
-    ``src`` and persisted: the 100-TB side never moves again.
-  * Each round shuffles only the rank table (16 bytes/vertex) to the
-    adj partitioning for the gather join, then a partial/final hash agg
-    by ``dst`` (map-side combine keeps the exchange at ~|V|, not |E|).
+    ``src`` and persisted. It stays put only because each round plans
+    over leaves: the cached adj keeps its partitioning, and a
+    ``shuffle_hash`` hint on the rank side pins the gather to a
+    shuffled hash join with no Exchange on the adj side.
+  * Each round moves only the rank table (16 bytes/vertex): a
+    checkpoint reports no partitioning, so the previous round's state
+    is re-shuffled to the adj partitioning for the gather, then a
+    partial/final hash agg by ``dst`` (map-side combine keeps that
+    exchange at ~|V|, not |E|).
   * The dangling scalar is a driver literal folded into the projection
     (Catalyst constant-folds (1-d)/N and d*dangling/N) — the whole
     point of lumping: no per-vertex dangling join, ever.
@@ -40,12 +51,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .superstep import supersteps
+from .superstep import release, supersteps
 
 
 @dataclass
 class PageRankResult:
-    ranks: DataFrame  # (id, rank) over the full vertex universe
+    # (id, rank) over the full vertex universe; pagerank() returns it
+    # cached, and its unpersist() frees every block the call left
+    ranks: DataFrame
     rounds: int
     converged: bool
     errors: list[float] = field(default_factory=list)
@@ -152,6 +165,7 @@ def pagerank(
         raise ValueError("pagerank: need edges or adjacency")
     hubs = None
     deg = None
+    leaf = None
     if adjacency is not None:
         # The loop's id width must MATCH the stored table's: a
         # narrowing cast on the stored side is a non-alias projection,
@@ -231,10 +245,17 @@ def pagerank(
                 and int(vrow["mn"]) >= -(2**31)
             )
         idx_t = "int" if use_int else "long"
-        verts = verts.select(F.col("id").cast(idx_t).alias("id"))
-        edges = edges.select(
+        # Cut the caller's lineage once, before anything derives from
+        # it: the first build job materialises this leaf, and every
+        # frame below (and so every round's plan) sits on it instead of
+        # on whatever plan the caller's frame carries, which Catalyst
+        # would otherwise re-analyse and cache-match each round.
+        edges = leaf = edges.select(
             F.col("src").cast(idx_t).alias("src"),
             F.col("dst").cast(idx_t).alias("dst"),
+        ).localCheckpoint(eager=False)
+        verts = vertex_universe(spark, edges, num_vertices, vertices).select(
+            F.col("id").cast(idx_t).alias("id")
         )
         # deg feeds three independent materializations (adjacency
         # weights, the initial rank table, the dangling complement) —
@@ -243,7 +264,9 @@ def pagerank(
         deg = out_degrees(edges).persist(StorageLevel.MEMORY_AND_DISK)
 
         # adj: the big, immutable side — partitioned once by the join key.
-        adj = edges.join(deg, edges.src == deg.id).select(
+        # The leaf reports no size, so unhinted this plans a sort-merge
+        # of the |E|-row side; hash the |V|-row degrees instead.
+        adj = edges.join(deg.hint("shuffle_hash"), edges.src == deg.id).select(
             "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
         )
         if hub_salt > 1:
@@ -299,15 +322,12 @@ def pagerank(
                 (adj_df.src == ranks_s.id) & (adj_df.salt == ranks_s.salt),
             )
         else:
-            r = ranks_df
-            if adjacency is not None:
-                # The cached bucketed scan drops the storage SORT
-                # metadata, so the planner falls back to sort-merge and
-                # re-sorts the |E|-row side EVERY round (measured
-                # 8.0-12.5 s/round vs 5.4-7.2 at N=1e7). Hint the hash
-                # map onto the rank side — same values, no per-round
-                # sort; the edge-frame path already plans SHJ.
-                r = ranks_df.hint("shuffle_hash")
+            # Hash map on the rank side, whatever the statistics say:
+            # without the hint a cached bucketed scan (which drops its
+            # storage SORT metadata) plans sort-merge and re-sorts the
+            # |E|-row side EVERY round (measured 8.0-12.5 s/round vs
+            # 5.4-7.2 at N=1e7), and small inputs broadcast instead.
+            r = ranks_df.hint("shuffle_hash")
             joined = adj_df.join(r, adj_df.src == r.id)
         return joined.groupBy("dst").agg(
             F.sum(F.col("rank") * F.col("w")).alias("contrib")
@@ -333,11 +353,9 @@ def pagerank(
         restored = checkpoint_manager.latest(spark)
         if restored is not None:
             ranks, meta = restored
-            ranks = (
-                ranks.select(F.col("id").cast(idx_t).alias("id"), "rank")
-                .repartition(num_partitions, "id")
-                .localCheckpoint(eager=True)
-            )
+            ranks = ranks.select(
+                F.col("id").cast(idx_t).alias("id"), "rank"
+            ).localCheckpoint(eager=True)
             start_round = meta["iteration"]
             dangling = meta["dangling_mass"]
             result.errors = meta.get("errors", [])
@@ -357,21 +375,18 @@ def pagerank(
                 "left",
             )
             .select("id", F.coalesce("rank", F.lit(inv_n)).alias("rank"))
-            .repartition(num_partitions, "id")
             .localCheckpoint(eager=True)
         )
         injected = ranks.agg(F.sum("rank")).collect()[0][0]
         dangling = 1.0 - (float(injected) if injected is not None else 0.0)
     if ranks is None:
-        ranks = (
-            nd_ids.withColumn("rank", F.lit(inv_n))
-            .repartition(num_partitions, "id")
-            .localCheckpoint(eager=True)
-        )
+        ranks = nd_ids.withColumn("rank", F.lit(inv_n)).localCheckpoint(eager=True)
 
     def step(state):
         ranks = state.select("id", "rank")
-        contribs = gather(adj, ranks)
+        # pinned hash join: by statistics alone the planner picks
+        # sort-merge for two |V|-row sides and re-sorts both each round
+        contribs = gather(adj, ranks).hint("shuffle_hash")
         return ranks.alias("r").join(
             contribs.alias("c"), F.col("r.id") == F.col("c.dst"), "left"
         ).select(
@@ -422,11 +437,11 @@ def pagerank(
             if err <= threshold:
                 result.converged = True
                 break
-    ranks = state.select("id", "rank")
+    final = state.select("id", "rank")
 
     # Final restore pass (MainPR.java:185-197): dangling vertices computed
     # once from converged neighbor ranks + the last dangling mass.
-    d_contribs = gather(adj_to_dang, ranks)
+    d_contribs = gather(adj_to_dang, final)
     dang_ranks = (
         dang.alias("v")
         .join(d_contribs.alias("c"), F.col("v.id") == F.col("c.dst"), "left")
@@ -438,24 +453,31 @@ def pagerank(
                 + F.lit(damping * dangling * inv_n)
             ).alias("rank"),
         )
-        # materialize so the cached inputs below can be released without
-        # forcing a recompute when the caller consumes result.ranks
-        .localCheckpoint(eager=True)
     )
+    # One cached table, materialized here: every checkpoint and cache of
+    # this call can then be released, and the caller's
+    # result.ranks.unpersist() frees the rest (it cannot free a
+    # checkpoint, which the result would otherwise read).
     result.ranks = (
-        ranks.select("id", "rank")
-        .unionByName(dang_ranks)
+        final.unionByName(dang_ranks)
         .select(F.col("id").cast("long").alias("id"), "rank")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # cache hygiene: everything persisted inside this call is now either
-    # consumed or checkpointed — release it so repeated pagerank() calls
-    # in one session don't accumulate storage (VERDICT r01 #4).
+    result.ranks.count()
+    release(state)
+    if state is not ranks:
+        release(ranks)  # the initial state: supersteps leaves it to us
+    # cache hygiene: release everything persisted inside this call so
+    # repeated pagerank() calls in one session don't accumulate storage
+    # (VERDICT r01 #4).
     caches = [adj, dang, deg, hubs]
     if adjacency is not None:
         caches.append(nd_ids)
     for cached in caches:
         if cached is not None:
             cached.unpersist()
+    if leaf is not None:
+        release(leaf)
     return result
 
 

@@ -31,6 +31,8 @@ from pyspark.sql import functions as F
 
 from dxa_pagerank_spark.plans.lineage import cut_lineage
 
+from .superstep import release
+
 
 def resolve_redirects(
     spark: SparkSession,
@@ -62,6 +64,8 @@ def resolve_redirects(
     # BigInteger digit growth in Catalyst's stats math — see
     # plans/lineage.py), so every per-round checkpoint is a cut_lineage
     ptr = cut_lineage(ptr)
+    release(rd)
+    release(srcs)
     for _ in range(max_rounds):
         n_pending = ptr.filter(~F.col("done")).count()
         if n_pending == 0:
@@ -88,12 +92,8 @@ def resolve_redirects(
         newly = nxt.filter(F.col("done")).count() - ptr.filter(
             F.col("done")
         ).count()
-        old = ptr
+        release(ptr)
         ptr = nxt
-        try:
-            old.unpersist()
-        except Exception:
-            pass
         if newly == 0:
             # sound cycle proof (see module docstring): nothing left
             # but redirect loops

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .pagerank import vertex_universe
+from .superstep import release
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
@@ -63,6 +64,7 @@ def _min_label_fixpoint(
     propagation would silently split one true SCC into several wrong
     labels downstream (COLLECT would mark only part of the class)."""
     n_changed = 0
+    held = None  # this loop's last checkpoint; the seed labels are the caller's
     for _ in range(max_rounds):
         pushed = (
             edges.join(labels, edges.src == labels.id)
@@ -85,12 +87,10 @@ def _min_label_fixpoint(
             )
         )
         n_changed = new.agg(F.sum("changed")).collect()[0][0] or 0
-        old = labels
+        if held is not None:
+            release(held)
+        held = new
         labels = new.select("id", "lab")
-        try:
-            old.unpersist()
-        except Exception:
-            pass
         if n_changed == 0:
             break
     if n_changed != 0:

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .superstep import release
+
 _KNUTH = 2654435761
 _M32 = 4294967296
 
@@ -119,10 +121,7 @@ def fiedler_vector(
             state = c.select(
                 "id", "d", (F.col("c") / F.lit(norm)).alias("x")
             ).localCheckpoint(eager=True)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+            release(old)
         return state.select("id", F.col("x").alias("fiedler"))
     finally:
         sym.unpersist()

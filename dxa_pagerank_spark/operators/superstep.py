@@ -37,7 +37,7 @@ from pyspark.storagelevel import StorageLevel
 STATE_STORAGE = StorageLevel.DISK_ONLY
 
 
-def _release(df: DataFrame) -> None:
+def release(df: DataFrame) -> None:
     """Drop the blocks behind a localCheckpoint-ed frame.
 
     ``DataFrame.unpersist`` only clears the SQL cache manager, which
@@ -45,11 +45,17 @@ def _release(df: DataFrame) -> None:
     frame's ``LogicalRDD`` plan and would otherwise stay registered
     until a JVM garbage collection lets the context cleaner find them.
     (``SparkContext.unpersistRDD``, not ``RDD.unpersist``: the latter
-    logs a lineage warning per call, i.e. per round.) Falls back to
-    ``unpersist`` for frames without that plan (or without the JVM
-    private surface, e.g. Spark Connect)."""
+    logs a lineage warning per call, i.e. per round.) Pass the
+    checkpointed frame itself (or a ``plans.lineage.cut_lineage``
+    result), not a projection of it. Falls back to ``unpersist`` for
+    frames without that plan (or without the JVM private surface, e.g.
+    Spark Connect)."""
     try:
         rdd = df._jdf.queryExecution().analyzed().rdd()
+        # a cut_lineage frame scans a projection of its checkpoint:
+        # step down to the RDD that holds the blocks
+        while not rdd.getStorageLevel().isValid():
+            rdd = rdd.dependencies().head().rdd()
         rdd.context().unpersistRDD(rdd.id(), False)
     except Exception:
         df.unpersist()
@@ -75,6 +81,6 @@ def supersteps(
         nxt = step(state).localCheckpoint(eager=False, storageLevel=STATE_STORAGE)
         row = nxt.agg(*aggs).collect()[0]
         if rnd > start + 1:
-            _release(state)
+            release(state)
         state = nxt
         yield rnd, state, row, int((time.monotonic() - t0) * 1000)

@@ -14,21 +14,55 @@ def _plan(df) -> str:
     )
 
 
-def test_pagerank_round_has_no_python(spark):
-    """One gather+apply superstep: pure JVM (joins + hash aggregate)."""
+def _children(node):
+    kids = node.children()
+    return [kids.apply(i) for i in range(kids.size())]
+
+
+def _subtree(node):
+    yield node
+    for kid in _children(node):
+        yield from _subtree(kid)
+
+
+def _branch(node):
+    """``node`` and what lies below it down to, not into, the next join."""
+    yield node
+    if "Join" not in node.nodeName():
+        for kid in _children(node):
+            yield from _branch(kid)
+
+
+def _physical(df):
+    """The physical plan Spark starts ``df`` with (AQE's current plan,
+    exchanges included)."""
+    root = df._jdf.queryExecution().executedPlan()
+    return root.executedPlan() if root.nodeName() == "AdaptiveSparkPlan" else root
+
+
+def test_pagerank_round_has_no_python(spark, monkeypatch):
+    """The superstep pagerank actually runs, captured from its loop on a
+    createDataFrame input: pure JVM (joins + hash aggregate), planned
+    over leaves, and the cached adjacency never moves."""
+    import dxa_pagerank_spark.operators.pagerank as pr
+
+    rounds = []
+    loop = pr.supersteps
+
+    def spy(state, step, *args):
+        def traced(st):
+            out = step(st)
+            rounds.append((_plan(out), _physical(out), out))
+            return out
+
+        return loop(state, traced, *args)
+
+    monkeypatch.setattr(pr, "supersteps", spy)
     src, dst = fast_synthetic_edges(2000, 4, seed=2)
-    edges = edges_to_spark(spark, src, dst)
-    deg = edges.groupBy(F.col("src").alias("id")).agg(F.count(F.lit(1)).alias("out_deg"))
-    adj = edges.join(deg, edges.src == deg.id).select(
-        "src", "dst", (F.lit(1.0) / F.col("out_deg")).alias("w")
-    )
-    ranks = deg.select("id", F.lit(1e-3).alias("rank"))
-    contribs = (
-        adj.join(ranks, adj.src == ranks.id)
-        .groupBy("dst")
-        .agg(F.sum(F.col("rank") * F.col("w")).alias("contrib"))
-    )
-    plan = _plan(contribs)
+    edges = edges_to_spark(spark, src, dst)  # createDataFrame: a LocalRelation
+    res = pr.pagerank(spark, edges, num_vertices=2000, threshold=0.0, max_rounds=2)
+    assert res.rounds == 2 and len(rounds) == 2
+    plan, physical, out = rounds[-1]
     assert "BatchEvalPython" not in plan  # no per-row Python, ever
     assert "ArrowEvalPython" not in plan  # hot loop is fully JVM
     # partial+final agg: two HashAggregate nodes around the exchange
@@ -36,6 +70,23 @@ def test_pagerank_round_has_no_python(spark):
     # the per-round gather must NOT re-sort the cached adjacency: no
     # sort-merge join in the superstep (hash-based joins only)
     assert "SortMergeJoin" not in plan
+    # the caller's plan is cut away: nothing of the createDataFrame
+    # input is left to re-analyse, neither logically nor physically
+    assert "LocalTableScan" not in plan
+    assert "LocalRelation" not in out._jdf.queryExecution().analyzed().toString()
+    # the gather: a shuffled hash join whose adjacency side is the
+    # cached scan itself, with no Exchange on it — only ranks move
+    gathers = [
+        (node, kid)
+        for node in _subtree(physical)
+        if "Join" in node.nodeName()
+        for kid in _children(node)
+        if any(n.nodeName() == "InMemoryTableScan" for n in _branch(kid))
+    ]
+    assert len(gathers) == 1
+    join, adj_side = gathers[0]
+    assert join.nodeName() == "ShuffledHashJoin"
+    assert not any("Exchange" in n.nodeName() for n in _branch(adj_side))
 
 
 def test_text_extraction_is_arrow_not_row_python(spark):
