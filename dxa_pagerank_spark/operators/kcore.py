@@ -138,10 +138,12 @@ def core_numbers(
                     .select("id")
                     .localCheckpoint(eager=True)
                 )
-                if nxt.count() == core.count():
-                    core = nxt
-                    break
+                fixed = nxt.count() == core.count()
+                if core is not alive:  # shells read alive, not inner rounds
+                    release(core)
                 core = nxt
+                if fixed:
+                    break
             # survivors of the (k-1)-core that did not make the k-core
             # have coreness k-1
             dropped = alive.join(core, "id", "left_anti").select(

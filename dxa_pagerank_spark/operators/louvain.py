@@ -265,25 +265,29 @@ def louvain(
         if level_moved == 0:
             if global_labels is None:
                 global_labels = labels
+            else:
+                release(held)
             break
         # compose: level-k labels relabel the communities of the
         # accumulated level-0 mapping
         if global_labels is None:
-            global_labels = labels
+            composed = labels
         else:
             step = labels.select(
                 F.col("id").alias("community"), F.col("c").alias("c_new")
             )
-            global_labels = (
+            composed = (
                 global_labels.withColumnRenamed("c", "community")
                 .join(step, "community")
                 .select("id", F.col("c_new").alias("c"))
             )
-        global_labels = cut_lineage(global_labels)
+        composed = cut_lineage(composed)
         new_adj = cut_lineage(_contract(adj, labels))
-        release(adj)
-        release(deg)
-        adj = new_adj
+        # both cuts are materialised: nothing reads the level's inputs
+        for stale in (global_labels, held, adj, deg):
+            if stale is not None:
+                release(stale)
+        global_labels, adj = composed, new_adj
 
     if global_labels is None:  # empty graph
         global_labels = spark.createDataFrame([], "id long, c long")

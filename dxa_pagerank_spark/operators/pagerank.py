@@ -188,6 +188,16 @@ def pagerank(
                 f"from src type {idx_t} — store both at one width"
             )
         idx_t = "int" if idx_t == "int" else "long"
+        if vertices is not None and idx_t == "int":
+            # explicit ids are cast to the stored width below, and an id
+            # outside int32 would wrap onto another vertex: bound them first
+            lo, hi = vertices.agg(F.min("id"), F.max("id")).first()
+            if lo is not None and not -(2**31) <= lo <= hi < 2**31:
+                raise ValueError(
+                    f"pagerank: adjacency stores int ids but vertices holds "
+                    f"ids in [{lo}, {hi}], outside int32 — rewrite the "
+                    "table with bigint ids"
+                )
         # Prebuilt (bucketed) adjacency: trust its storage partitioning
         # — no out-degree join, no repartition shuffle of the |E| side.
         # The casts below are identities by construction (idx_t taken
@@ -204,8 +214,8 @@ def pagerank(
             spark, adj.select("src", "dst"), num_vertices, vertices
         )
         # only the size is needed — the id width is already fixed by the
-        # stored table, so no max/min aggregate. num_vertices wins over
-        # the universe's row count, as in the edge-frame branch.
+        # stored table. num_vertices wins over the universe's row count,
+        # as in the edge-frame branch.
         n = num_vertices if num_vertices is not None else int(verts.count())
         if idx_t == "int" and n > 2**31:
             raise ValueError(

@@ -58,7 +58,8 @@ def _min_label_fixpoint(
     edges: DataFrame, labels: DataFrame, max_rounds: int
 ) -> DataFrame:
     """Propagate min label along edge direction (src -> dst) to
-    fixpoint. labels: (id, lab) seeded with lab = id.
+    fixpoint. labels: (id, lab) seeded with lab = id. Returns its last
+    checkpoint (id, lab, changed); the earlier rounds' are released.
 
     Raises if max_rounds is exhausted before the fixpoint: a partial
     propagation would silently split one true SCC into several wrong
@@ -99,7 +100,7 @@ def _min_label_fixpoint(
             "rounds (graph diameter exceeds max_inner); raise max_inner "
             "— continuing would emit incorrect SCC labels"
         )
-    return labels
+    return labels if held is None else held
 
 
 def _reach_fixpoint(
@@ -109,7 +110,8 @@ def _reach_fixpoint(
     max_rounds: int,
 ) -> DataFrame:
     """Set of vertex ids reachable from seeds(id) along ('fwd') or
-    against ('bwd') edge direction, seeds included."""
+    against ('bwd') edge direction, seeds included. Returns a checkpoint
+    of its own; every other checkpoint of the closure is released."""
     a, b = ("src", "dst") if direction == "fwd" else ("dst", "src")
     reached = _ckpt(seeds.select("id").distinct())
     frontier = reached
@@ -123,11 +125,15 @@ def _reach_fixpoint(
             .distinct()
         )
         new = _ckpt(step.join(reached, "id", "left_anti"))
+        if frontier is not reached:
+            release(frontier)
         if new.limit(1).count() == 0:
+            release(new)
             converged = True
             break
-        reached = _ckpt(reached.union(new))
-        frontier = new
+        grown = _ckpt(reached.union(new))
+        release(reached)
+        reached, frontier = grown, new
     if not converged:
         raise RuntimeError(
             f"reachability closure did not converge in {max_rounds} "
@@ -148,8 +154,21 @@ def strongly_connected_components(
     """-> (id, scc) over the vertex universe; scc = min id in the
     strongly connected component (isolated/trivial vertices are their
     own singleton SCC)."""
-    verts = _ckpt(vertex_universe(spark, edges, num_vertices, vertices))
-    live_edges = _ckpt(
+    cuts: list[DataFrame] = []  # this call's checkpoints not yet released
+
+    def ckpt(df: DataFrame) -> DataFrame:
+        cuts.append(_ckpt(df))
+        return cuts[-1]
+
+    def keep_only(*kept: DataFrame | None) -> None:
+        """Release every checkpoint of the call except ``kept``."""
+        for cut in cuts:
+            if all(cut is not k for k in kept):
+                release(cut)
+        cuts[:] = [c for c in cuts if any(c is k for k in kept)]
+
+    verts = ckpt(vertex_universe(spark, edges, num_vertices, vertices))
+    live_edges = ckpt(
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
@@ -158,7 +177,7 @@ def strongly_connected_components(
 
     def emit(assign: DataFrame) -> None:
         nonlocal done
-        done = _ckpt(assign if done is None else done.union(assign))
+        done = ckpt(assign if done is None else done.union(assign))
 
     live = verts
     for _ in range(max_outer):
@@ -189,7 +208,7 @@ def strongly_connected_components(
                 .filter((F.col("ho") == 1) & (F.col("hi") == 1))
                 .select("id", F.lit(1).alias("keep"))
             )
-            mark = _ckpt(live.join(both, "id", "left"))
+            mark = ckpt(live.join(both, "id", "left"))
             if mark.filter(F.col("keep").isNull()).limit(1).count() == 0:
                 break
             trimmed.append(mark.filter(F.col("keep").isNull()).select("id"))
@@ -201,17 +220,19 @@ def strongly_connected_components(
             emit(peeled.select("id", F.col("id").alias("scc")))
         if live.limit(1).count() == 0:
             break
-        live_edges = _ckpt(_induced(live_edges, live))
+        live_edges = ckpt(_induced(live_edges, live))
 
         # --- COLOR: color(v) = min id reaching v in the subgraph.
-        colors = _min_label_fixpoint(
+        labels = _min_label_fixpoint(
             live_edges,
             live.select("id", F.col("id").alias("lab")),
             max_inner,
-        ).withColumnRenamed("lab", "color")
+        )
+        cuts.append(labels)
+        colors = labels.withColumnRenamed("lab", "color")
 
         # --- COLLECT: backward-mark SCC(root) inside each color class.
-        ce = _ckpt(
+        ce = ckpt(
             live_edges.alias("e")
             .join(
                 colors.alias("cs"),
@@ -230,14 +251,19 @@ def strongly_connected_components(
             "bwd",
             max_inner,
         )
+        cuts.append(marked)
         assigned = colors.join(marked, "id", "left_semi")
         emit(assigned.select("id", F.col("color").alias("scc")))
-        live = _ckpt(live.join(marked, "id", "left_anti"))
+        live = ckpt(live.join(marked, "id", "left_anti"))
         if live.limit(1).count() == 0:
             break
-        live_edges = _ckpt(_induced(live_edges, live))
+        live_edges = ckpt(_induced(live_edges, live))
+        # the round's state is in these three: free its trims, colors, marks
+        keep_only(done, live, live_edges)
 
-    if live.limit(1).count() > 0:
+    unfinished = live.limit(1).count() > 0
+    keep_only(done)
+    if unfinished:
         # vertices left after max_outer were never decomposed; labeling
         # them singletons would be silently wrong — fail loudly instead
         raise RuntimeError(
@@ -283,6 +309,8 @@ def bowtie_classes(
     core = _ckpt(sccs.filter(F.col("scc") == core_id).select("id"))
     fwd = _reach_fixpoint(e, core, "fwd", max_inner)
     bwd = _reach_fixpoint(e, core, "bwd", max_inner)
+    release(e)
+    release(core)
     return (
         sccs.alias("s")
         .join(

@@ -26,14 +26,13 @@ from ..functions.textextract import extract_text_udf
 
 
 def extract_page_links(pages: DataFrame) -> DataFrame:
-    """pages(url, html, ...) -> (url, link) one row per anchor, document
-    order preserved via pos (duplicates kept)."""
-    with_links = pages.select(
-        "url", extract_links_udf()(F.col("html"), F.col("url")).alias("links")
-    )
-    return with_links.select(
-        "url", F.posexplode("links").alias("pos", "link")
-    ).select("url", "pos", "link")
+    """pages(url, html, ...) -> (url, pos, link) one row per anchor,
+    document order preserved via pos (duplicates kept)."""
+    # The UDF sits inside posexplode so each page is parsed once: exploding
+    # an aliased UDF column lets Catalyst infer size() > 0 from the
+    # generator and push it below the projection, copying the UDF.
+    links = extract_links_udf()(F.col("html"), F.col("url"))
+    return pages.select("url", F.posexplode(links).alias("pos", "link"))
 
 
 def pages_to_edges(
@@ -76,17 +75,16 @@ def page_anchors(pages: DataFrame) -> DataFrame:
     signal — aggregated per *target* it describes pages the crawl may
     not even contain (the web-scale path groups by xxhash64(link), so
     the 100-TB shuffle carries (8B id, short text) rows only)."""
-    with_anchors = pages.select(
-        "url", extract_anchors_udf()(F.col("html"), F.col("url")).alias("anchors")
-    )
-    return with_anchors.select(
-        "url", F.posexplode("anchors").alias("pos", "a")
-    ).select("url", "pos", F.col("a.link").alias("link"), F.col("a.text").alias("text"))
+    anchors = extract_anchors_udf()(F.col("html"), F.col("url"))  # see above
+    exploded = pages.select("url", F.posexplode(anchors).alias("pos", "a"))
+    return exploded.select("url", "pos", "a.link", "a.text")
 
 
 def enrich_pages(pages: DataFrame) -> DataFrame:
     """Recompute the text column from html via the frozen extraction UDF
-    (byte-identical per url to the pure-Python oracle — input_hint)."""
+    (byte-identical per url to the pure-Python oracle — input_hint).
+    A filter on ``text`` copies the UDF into the filter and parses every
+    page again: materialise (cache, checkpoint or write) before filtering."""
     return pages.withColumn("text", extract_text_udf()(F.col("html")))
 
 

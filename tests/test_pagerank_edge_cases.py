@@ -75,3 +75,20 @@ def test_adjacency_rejects_mismatched_id_types(spark):
     )
     with pytest.raises(ValueError, match="dst type bigint differs from src type int"):
         pagerank(spark, None, num_vertices=2, adjacency=adj)
+
+
+def test_adjacency_refuses_vertex_ids_wider_than_int(spark):
+    """An int adjacency with explicit bigint vertices: an id outside
+    int32 is refused before any round, never cast onto another vertex;
+    in-range ids run, sized by the same aggregate."""
+    adj = spark.createDataFrame(
+        [(0, 1, 1.0), (1, 0, 1.0)], "src int, dst int, w double"
+    )
+    for far in (2**31, -(2**31) - 1):
+        verts = spark.createDataFrame([(0,), (1,), (far,)], "id bigint")
+        with pytest.raises(ValueError, match="outside int32"):
+            pagerank(spark, None, vertices=verts, adjacency=adj, max_rounds=1)
+    verts = spark.createDataFrame([(0,), (1,), (2**31 - 1,)], "id bigint")
+    res = pagerank(spark, None, vertices=verts, adjacency=adj, max_rounds=1)
+    assert res.num_vertices == 3
+    assert {r["id"] for r in res.ranks.collect()} == {0, 1, 2**31 - 1}

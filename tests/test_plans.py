@@ -100,6 +100,30 @@ def test_text_extraction_is_arrow_not_row_python(spark):
     assert "BatchEvalPython" not in plan  # not row-at-a-time
 
 
+def test_link_parsers_run_once_per_page(spark):
+    """Each page's links (and anchors) are parsed by one Arrow UDF node.
+    Exploding an aliased UDF column would let Catalyst infer a size()
+    filter from the generator and copy the UDF below it: two nodes."""
+    from dxa_pagerank_spark.datagen import make_pages, pages_to_spark
+    from dxa_pagerank_spark.sources.pages import page_anchors, pages_to_edges
+
+    rows, _, _ = make_pages(5)
+    pages = pages_to_spark(spark, rows)
+    url_ids = spark.createDataFrame(
+        [(r["url"], i) for i, r in enumerate(rows)], "url string, id long"
+    )
+    plans = {
+        "xxhash64": pages_to_edges(pages),
+        "restrict_to_corpus": pages_to_edges(pages, restrict_to_corpus=True),
+        "join": pages_to_edges(pages, id_mode="join", url_ids=url_ids),
+        "page_anchors": page_anchors(pages),
+    }
+    for mode, df in plans.items():
+        nodes = [n.nodeName() for n in _subtree(_physical(df))]
+        assert nodes.count("ArrowEvalPython") == 1, mode
+        assert "BatchEvalPython" not in nodes, mode
+
+
 def test_parquet_scan_prunes_columns(spark):
     li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     q = li.select("l_orderkey", "l_suppkey").filter(F.col("l_orderkey") > 100)

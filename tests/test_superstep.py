@@ -109,6 +109,50 @@ def test_kcore_storage_does_not_grow_with_rounds(spark):
     assert held_after(1) == held_after(5) == 1
 
 
+def test_scc_storage_does_not_grow_with_rounds(spark):
+    """A directed cycle with a three-vertex tail: coloring and the
+    backward closure take one round per cycle vertex, trimming one per
+    tail vertex. After the call only the result's checkpoint is held,
+    whatever the cycle's length."""
+    from dxa_pagerank_spark.operators.scc import strongly_connected_components
+
+    sc = spark.sparkContext
+
+    def held_after(cycle):
+        ring = [(i, (i + 1) % cycle) for i in range(cycle)]
+        tail = [(cycle - 1, cycle), (cycle, cycle + 1), (cycle + 1, cycle + 2)]
+        edges = spark.createDataFrame(ring + tail, "src long, dst long")
+        before = _persistent(sc)
+        sccs = strongly_connected_components(spark, edges)
+        held = _persistent(sc) - before
+        got = {r["id"]: r["scc"] for r in sccs.collect()}  # still readable
+        assert got == {**{i: 0 for i in range(cycle)},
+                       **{v: v for v in range(cycle, cycle + 3)}}
+        return len(held)
+
+    assert held_after(3) == held_after(6) == 1
+
+
+def test_core_numbers_storage_does_not_grow_with_rounds(spark):
+    """Peeling a path's 2-core takes one round per two vertices; only
+    the per-level cores the result still reads stay held."""
+    from dxa_pagerank_spark.operators.kcore import core_numbers
+
+    sc = spark.sparkContext
+
+    def held_after(length):
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(length - 1)], "src long, dst long"
+        )
+        before = _persistent(sc)
+        cores = core_numbers(spark, edges)
+        held = _persistent(sc) - before
+        assert {r["coreness"] for r in cores.collect()} == {1}
+        return len(held)
+
+    assert held_after(6) == held_after(16)
+
+
 def test_pagerank_frees_everything_with_its_result(spark):
     """After a pagerank call and an unpersist of its result, storage is
     back to what it was before the call: the cut of the caller's edges,
